@@ -1,8 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.core.{Graph, GraphLink, GraphNode}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import graft.core.{Graph, GraphLink, GraphNode, SmallInput}
 
 /** Graph set algebra — the reference's entire query surface beyond the fixed
   * pipeline (arelight/backend/d3js/relations_graph_operations.py:17-109; CLI
@@ -246,85 +247,43 @@ object GraphOps {
     * (measured: betweenness 8.2s -> 3.1s, the same effect across the
     * pagerank/walks family). `maxLazy` is per-operator: plan-tree size grows
     * with the number of consumers each round's relation feeds (linear chains
-    * tolerate ~8 rounds; two-consumer shapes double per round).
-    *
-    * Over-budget loops truncate with a tunable policy (A/B-measured per
-    * round; see tools/IterProbe):
-    *   - `spark.graft.iter.stride` (default 1): truncate every stride-th
-    *     round only — fewer barriers, plan growth bounded by growth^stride;
-    *   - `spark.graft.iter.eager` (default true): eager materializes the
-    *     round in its own job (old behavior); lazy (`false`) truncates the
-    *     LOGICAL plan immediately (LogicalRDD) but defers computation to
-    *     the consuming action, removing the per-round job barrier;
-    *   - `spark.graft.iter.skipFinal` (default false): never checkpoint the
-    *     loop's last round — its single downstream consumer materializes it
-    *     anyway; callers that fan the result out re-checkpoint themselves. */
-  private[graft] def roundCkpt(rounds: Int, maxLazy: Int): DataFrame => DataFrame = {
-    var r = 0
-    df => {
-      r += 1
-      if (rounds <= maxLazy) df
-      else {
-        val conf = df.sparkSession.conf
-        val stride = conf.get("spark.graft.iter.stride", "1").toInt
-        val eager = conf.get("spark.graft.iter.eager", "true").toBoolean
-        val skipFinal = conf.get("spark.graft.iter.skipFinal", "false").toBoolean
-        if (skipFinal && r == rounds) df
-        else if (r % stride != 0) df
-        else if (eager) df.localCheckpoint(true)
-        else {
-          // Lazy truncation: plan the round WITHOUT AQE — an adaptive plan
-          // materializes its shuffle stages with blocking jobs even under
-          // localCheckpoint(eager = false), which would re-introduce the
-          // per-round barrier this mode exists to remove. Planning happens
-          // inside the localCheckpoint call, so the conf flip is scoped.
-          val sess = df.sparkSession
-          val key = "spark.sql.adaptive.enabled"
-          val prev = sess.conf.get(key, "true")
-          sess.conf.set(key, "false")
-          try df.localCheckpoint(false) finally sess.conf.set(key, prev)
-        }
-      }
-    }
-  }
+    * tolerate ~8 rounds; two-consumer shapes double per round). Over-budget
+    * loops materialize every round with an eager localCheckpoint. */
+  private[graft] def roundCkpt(rounds: Int, maxLazy: Int): DataFrame => DataFrame =
+    df => if (rounds <= maxLazy) df else df.localCheckpoint(true)
 
-  /** The [[prPrep]]ed edge relation collected when small enough for the
-    * PageRank-family driver fast paths: (source, target, w, ow) — strings
-    * + longs only, no nulls, else None (the distributed loop runs). The
-    * relation is prPrep's CHECKPOINT, so the weight validation has already
-    * executed; at the documented bounds (rank ≤ 10^12, w ≤ 10^5) every
-    * driver product stays under 2^63 exactly like the distributed plan. */
-  private def collectSmallEw(ew: DataFrame,
-      bound: Int = louvainSmallBound): Option[Array[(String, String, Long, Long)]] = {
-    if (bound <= 0) return None
-    import org.apache.spark.sql.types.{LongType, StringType}
-    val f = ew.schema.fields
-    if (f.length != 4 || f(0).dataType != StringType || f(1).dataType != StringType ||
-        f(2).dataType != LongType || f(3).dataType != LongType) return None
-    val rows = ew.limit(bound + 1).collect()
-    if (rows.length > bound || rows.isEmpty ||
-        rows.exists(r => (0 to 3).exists(r.isNullAt))) None
-    else Some(rows.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))))
-  }
+  /** The small-graph fast paths: when the probed relation passes the
+    * [[SmallInput]] gate (default [[SmallInput.GraphBound]] rows; a session
+    * bound of 0 forces the distributed loops) it is collected ONCE and the
+    * operator replays its exact integer arithmetic driver-side. This is
+    * the shape production multilevel Louvain takes anyway — coarsen until
+    * the graph fits one machine, finish locally. Typed views: only
+    * string-keyed, long-weighted relations are driver-replayable (the
+    * comparators below are UTF-8 binary / exact Long). */
+  private def smallOf(df: DataFrame, types: DataType*): Option[Array[Row]] =
+    SmallInput.rows(df, SmallInput.GraphBound, _ == types)
 
-  /** Nodes of a collected [[collectSmallEw]] relation (= prPrep's node set). */
+  /** The [[prPrep]]ed edge relation (source, target, w, ow) for the
+    * PageRank-family replicas. The relation is prPrep's CHECKPOINT, so the
+    * weight validation has already executed; at the documented bounds
+    * (rank ≤ 10^12, w ≤ 10^5) every driver product stays under 2^63
+    * exactly like the distributed plan. */
+  private def smallEw(ew: DataFrame): Option[Array[(String, String, Long, Long)]] =
+    smallOf(ew, StringType, StringType, LongType, LongType)
+      .map(_.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))))
+
+  /** A 2-column string pair relation. */
+  private def smallPairs(adj: DataFrame): Option[Array[(String, String)]] =
+    smallOf(adj, StringType, StringType).map(_.map(r => (r.getString(0), r.getString(1))))
+
+  /** A (string, string, long) adjacency. */
+  private def smallAdj(adj: DataFrame): Option[Array[(String, String, Long)]] =
+    smallOf(adj, StringType, StringType, LongType)
+      .map(_.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
+
+  /** Nodes of a collected [[smallEw]] relation (= prPrep's node set). */
   private def ewNodes(es: Array[(String, String, Long, Long)]): Array[String] =
     (es.map(_._1) ++ es.map(_._2)).distinct
-
-  /** A 2-column string pair relation collected when small enough, else
-    * None (same guards as [[collectSmallAdj]]). */
-  private def collectSmallPairs(adj: DataFrame,
-      bound: Int = louvainSmallBound): Option[Array[(String, String)]] = {
-    if (bound <= 0) return None
-    import org.apache.spark.sql.types.StringType
-    val f = adj.schema.fields
-    if (f.length != 2 || f(0).dataType != StringType ||
-        f(1).dataType != StringType) return None
-    val rows = adj.limit(bound + 1).collect()
-    if (rows.length > bound || rows.isEmpty ||
-        rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-    else Some(rows.map(r => (r.getString(0), r.getString(1))))
-  }
 
   /** One PageRank-style contribution pass driver-side: per edge,
     * (85 * r(source) * w) div (100 * ow) summed into the target — the
@@ -339,26 +298,18 @@ object GraphOps {
     cin
   }
 
-  def pageRank(edges: DataFrame, iters: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
     val g = prPrep(edges)
-    // SMALL-GRAPH FAST PATH (the louvain-family discipline): one bounded
-    // collect of the validated edge relation, then the identical exact
-    // BIGINT recurrence driver-side — bit-equal ranks, spec-pinned.
-    collectSmallEw(g.ew, smallBound).foreach { es =>
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val nodes = ewNodes(es)
-      var r: collection.Map[String, Long] = nodes.map(_ -> g.t).toMap
-      for (_ <- 1 to iters) {
-        val cin = prContribs(es, r)
-        r = nodes.map(n => n -> (g.base + cin(n))).toMap
-      }
-      return nodes.toSeq.map(n => (n, r(n))).toDF("id", "r")
-    }
+    prRounds(g, g.nodes.select(col("id"), lit(g.t).as("r")), iters)
+  }
+
+  /** The [[pageRank]] recurrence from start ranks (id, r) over every node
+    * of `g`: per round one join co-partitioned on source + one aggregation
+    * on target, the fixed budget one lazy plan ([[roundCkpt]]). */
+  private def prRounds(g: PrGraph, ranks0: DataFrame, iters: Int): DataFrame = {
     val (ew, nodes, base) = (g.ew, g.nodes, g.base)
     val ck = roundCkpt(iters, maxLazy = 8)
-    var ranks = nodes.select(col("id"), lit(g.t).as("r"))
+    var ranks = ranks0
     for (_ <- 1 to iters) {
       val contribs = ew.join(ranks, ew("source") === ranks("id"))
         .select(col("target"), expr("(85 * r * w) div (100 * ow)").as("contrib"))
@@ -379,43 +330,11 @@ object GraphOps {
     * stored ranks (new entities since the snapshot) start at the uniform
     * share 10^12 div N of the CURRENT node set; stale rank rows for nodes no
     * longer in the graph are dropped. */
-  def pageRankResume(edges: DataFrame, prevRanks: DataFrame, iters: Int = 1,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def pageRankResume(edges: DataFrame, prevRanks: DataFrame, iters: Int = 1): DataFrame = {
     require(iters >= 1 && iters <= 16, s"iters must be in [1,16]: $iters")
     val g = prPrep(edges)
-    // small-graph fast path: the stored ranks are node-sized, so both
-    // collects are bounded; new nodes start at the uniform share, stale
-    // stored rows drop — exactly the distributed left-join semantics
-    collectSmallEw(g.ew, smallBound).foreach { es =>
-      val prevRows = prevRanks.select(col("id"), col("r")).limit(smallBound + 1).collect()
-      if (prevRows.length <= smallBound &&
-          prevRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
-            r.get(0).isInstanceOf[String] && r.get(1).isInstanceOf[Long])) {
-        val spark = edges.sparkSession
-        import spark.implicits._
-        val prev = prevRows.map(r => r.getString(0) -> r.getLong(1)).toMap
-        val nodes = ewNodes(es)
-        var r: collection.Map[String, Long] =
-          nodes.map(n => n -> prev.getOrElse(n, g.t)).toMap
-        for (_ <- 1 to iters) {
-          val cin = prContribs(es, r)
-          r = nodes.map(n => n -> (g.base + cin(n))).toMap
-        }
-        return nodes.toSeq.map(n => (n, r(n))).toDF("id", "r")
-      }
-    }
-    val (ew, nodes, base) = (g.ew, g.nodes, g.base)
-    val ck = roundCkpt(iters, maxLazy = 8)
-    var ranks = nodes.join(prevRanks.select(col("id"), col("r").as("prev_r")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("prev_r"), lit(g.t)).as("r"))
-    for (_ <- 1 to iters) {
-      val contribs = ew.join(ranks, ew("source") === ranks("id"))
-        .select(col("target"), expr("(85 * r * w) div (100 * ow)").as("contrib"))
-        .groupBy(col("target")).agg(sum(col("contrib")).as("cin"))
-      ranks = ck(nodes.join(contribs, nodes("id") === contribs("target"), "left")
-        .select(col("id"), (lit(base) + coalesce(col("cin"), lit(0L))).as("r")))
-    }
-    ranks
+    prRounds(g, g.nodes.join(prevRanks.select(col("id"), col("r").as("prev_r")), Seq("id"), "left")
+      .select(col("id"), coalesce(col("prev_r"), lit(g.t)).as("r")), iters)
   }
 
   /** PageRank with CLASSIC dangling-mass redistribution plus an epsilon stop
@@ -438,15 +357,14 @@ object GraphOps {
     * Engine extension with no reference counterpart (the reference computes
     * d3js edge weights, not centrality — see [[pageRank]]'s deviation note);
     * 85/100 damping follows the classic public formulation. */
-  def pageRankDangling(edges: DataFrame, iters: Int = 3, eps: Long = 0L,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def pageRankDangling(edges: DataFrame, iters: Int = 3, eps: Long = 0L): DataFrame = {
     require(eps >= 0 && eps < 1000000000000L, s"eps out of [0, 1e12): $eps")
     val g = prPrep(edges)
     // small-graph fast path: the per-round job (co-partitioned join +
     // one-row dangling broadcast + observe barrier) replays driver-side —
     // same dangling-mass term (85*D) div (100*N), same max-|delta| epsilon
     // stop BEFORE the next round, bit-equal ranks (spec-pinned)
-    collectSmallEw(g.ew, smallBound).foreach { es =>
+    smallEw(g.ew).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val nodes = ewNodes(es)
@@ -524,12 +442,11 @@ object GraphOps {
     * [[pageRank]]; iters fixed (unrolled in the SQL oracle). One
     * co-partitioned join + aggregation per round, lineage truncated.
     * Engine extension, no reference counterpart (see [[pageRank]]). */
-  def personalizedPageRank(edges: DataFrame, source: String, iters: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def personalizedPageRank(edges: DataFrame, source: String, iters: Int = 3): DataFrame = {
     val g = prPrep(edges)
     // small-graph fast path: identical restart-at-source recurrence
     // driver-side (contributions from r=0 nodes are 0 either way)
-    collectSmallEw(g.ew, smallBound).foreach { es =>
+    smallEw(g.ew).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val nodes = ewNodes(es)
@@ -661,8 +578,7 @@ object GraphOps {
     * not one node at a time). Per round: one degree aggregation + two
     * semi-joins on the adjacency relation, all co-partitioned on the node
     * key; lineage truncated per round. */
-  def kCore(edges: DataFrame, k: Long = 2, rounds: Int = 4,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def kCore(edges: DataFrame, k: Long = 2, rounds: Int = 4): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k and rounds must be positive: k=$k rounds=$rounds")
     val und = edges.filter(col("source") =!= col("target"))
       .select(least(col("source"), col("target")).as("a"),
@@ -674,7 +590,7 @@ object GraphOps {
     // small-graph fast path: the fixed-round peeling driver-side — each
     // round drops every node below k in the surviving adjacency, exactly
     // the distributed degree-filter + double semi-join (spec-pinned)
-    collectSmallPairs(adj, smallBound).foreach { a0 =>
+    smallPairs(adj).foreach { a0 =>
       val spark = edges.sparkSession
       import spark.implicits._
       var a = a0
@@ -714,13 +630,12 @@ object GraphOps {
     * exact-int in double, so it is bit-identical cross-engine. At scale, hub
     * neighbors fan out quadratically — `maxDegree` drops neighbors above the
     * cap from wedge generation (a skew guard pinned in the oracle too). */
-  def neighborJaccard(edges: DataFrame, maxDegree: Long = 10000L,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def neighborJaccard(edges: DataFrame, maxDegree: Long = 10000L): DataFrame = {
     // small-graph fast path: wedge pairs through each hub-capped shared
     // neighbor, full degrees for the jaccard denominator (one double
     // division of exact ints, as distributed)
     val und0 = undirectedSimple(edges).localCheckpoint()
-    wedgeDriver(und0, smallBound).foreach { case (deg, members) =>
+    wedgeDriver(und0, maxDegree).foreach { case (deg, members) =>
       val spark = edges.sparkSession
       import spark.implicits._
       val acc = collection.mutable.HashMap.empty[(String, String), Long]
@@ -769,8 +684,7 @@ object GraphOps {
     * out-edges) hold authority (resp. hub) 0 after the first round. One
     * co-partitioned join + aggregation per half-round, lineage truncated.
     * Output: (id, hub, auth). Engine extension, no reference counterpart. */
-  def hits(edges: DataFrame, iters: Int = 2,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
     val g = prPrep(edges) // validated integer weights + node set
     // SMALL-GRAPH FAST PATH (the louvain-family discipline): each HITS
     // round is 2 truncation arms x (join + agg + one-row broadcast) whose
@@ -781,55 +695,45 @@ object GraphOps {
     // `x div greatest(1, total div 1e6)` truncating normalization — all
     // operands non-negative, so Spark's div == Scala /). Bit-equal scores,
     // spec-pinned; above the bound the distributed loop runs unchanged.
-    if (smallBound > 0) {
-      val probe = g.ew.select(col("source"), col("target"), col("w"))
-        .limit(smallBound + 1).collect()
-      if (probe.length <= smallBound && probe.nonEmpty &&
-          probe.head.get(0).isInstanceOf[String]) {
-        val es = probe.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val nodeSet = (es.map(_._1) ++ es.map(_._2)).distinct
-        var hub = nodeSet.map(_ -> 1000000L).toMap
-        var auth = nodeSet.map(_ -> 1000000L).toMap
-        for (_ <- 1 to iters) {
-          val aRaw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-          es.foreach { case (s, t, w) => aRaw(t) += hub(s) * w }
-          val asum = aRaw.valuesIterator.sum
-          val aDiv = math.max(1L, asum / 1000000L)
-          auth = nodeSet.map(n => n -> aRaw(n) / aDiv).toMap
-          val hRaw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-          es.foreach { case (s, t, w) => hRaw(s) += auth(t) * w }
-          val hsum = hRaw.valuesIterator.sum
-          val hDiv = math.max(1L, hsum / 1000000L)
-          hub = nodeSet.map(n => n -> hRaw(n) / hDiv).toMap
-        }
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return nodeSet.toSeq.map(n => (n, hub(n), auth(n))).toDF("id", "hub", "auth")
+    smallEw(g.ew).foreach { es =>
+      val nodeSet = ewNodes(es)
+      var hub = nodeSet.map(_ -> 1000000L).toMap
+      var auth = nodeSet.map(_ -> 1000000L).toMap
+      for (_ <- 1 to iters) {
+        val aRaw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+        es.foreach { case (s, t, w, _) => aRaw(t) += hub(s) * w }
+        val asum = aRaw.valuesIterator.sum
+        val aDiv = math.max(1L, asum / 1000000L)
+        auth = nodeSet.map(n => n -> aRaw(n) / aDiv).toMap
+        val hRaw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+        es.foreach { case (s, t, w, _) => hRaw(s) += auth(t) * w }
+        val hsum = hRaw.valuesIterator.sum
+        val hDiv = math.max(1L, hsum / 1000000L)
+        hub = nodeSet.map(n => n -> hRaw(n) / hDiv).toMap
       }
+      val spark = edges.sparkSession
+      import spark.implicits._
+      return nodeSet.toSeq.map(n => (n, hub(n), auth(n))).toDF("id", "hub", "auth")
     }
     val ew = g.ew.select(col("source"), col("target"), col("w")).localCheckpoint()
     val nodes = g.nodes
     // auth feeds two consumers per round (hub update + the final zip), so
     // the lazy plan doubles per iteration — a tighter budget than the
     // linear-chain operators
-    // one truncation chain PER ARM: a shared instance would count each
-    // arm's call as a round and misfire stride/skipFinal under non-default
-    // knobs (one arm starved of truncation, the other skipping mid-loop)
-    val ckA = roundCkpt(iters, maxLazy = 4)
-    val ckS = roundCkpt(iters, maxLazy = 4)
+    val ck = roundCkpt(iters, maxLazy = 4)
     var scores = nodes.select(col("id"), lit(1000000L).as("hub"), lit(1000000L).as("auth"))
     for (_ <- 1 to iters) {
       val aRaw = ew.join(scores.select(col("id"), col("hub")), ew("source") === col("id"))
         .groupBy(col("target")).agg(sum(col("hub") * col("w")).as("a_raw"))
       val aNorm = aRaw.agg(sum(col("a_raw")).as("asum"))
-      val auth = ckA(nodes.join(aRaw, nodes("id") === aRaw("target"), "left")
+      val auth = ck(nodes.join(aRaw, nodes("id") === aRaw("target"), "left")
         .crossJoin(broadcast(aNorm))
         .select(col("id"),
           expr("coalesce(a_raw, 0L) div greatest(1L, asum div 1000000L)").as("auth")))
       val hRaw = ew.join(auth.select(col("id"), col("auth")), ew("target") === col("id"))
         .groupBy(col("source")).agg(sum(col("auth") * col("w")).as("h_raw"))
       val hNorm = hRaw.agg(sum(col("h_raw")).as("hsum"))
-      scores = ckS(nodes.join(hRaw, nodes("id") === hRaw("source"), "left")
+      scores = ck(nodes.join(hRaw, nodes("id") === hRaw("source"), "left")
         .crossJoin(broadcast(hNorm))
         .select(col("id"),
           expr("coalesce(h_raw, 0L) div greatest(1L, hsum div 1000000L)").as("hub"))
@@ -850,8 +754,7 @@ object GraphOps {
     * Per round: one co-partitioned join + weighted count + one
     * WindowGroupLimit-shaped argmax, lineage truncated. Output: (id, label).
     * Engine extension, no reference counterpart. */
-  def labelPropagation(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val und = edges.filter(col("source") =!= col("target"))
       .groupBy(least(col("source"), col("target")).as("a"),
         greatest(col("source"), col("target")).as("b"))
@@ -859,21 +762,22 @@ object GraphOps {
     val adj = und.select(col("a").as("x"), col("b").as("n"), col("w"))
       .union(und.select(col("b"), col("a"), col("w")))
       .localCheckpoint()
-    lpaOn(adj, rounds, smallBound)
-  }
-
-  /** The LPA round loop over a prepared doubled adjacency ([[modularity]]
-    * shares it so the undirected collapse is built once, not per consumer). */
-  private def lpaOn(adj: DataFrame, rounds: Int, smallBound: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // small-graph fast path: one collect + the identical synchronous
     // argmax rounds driver-side ((wsum desc, label asc) with labels in
     // UTF-8 binary order) — bit-equal labels, spec-pinned
-    collectSmallAdj(adj, smallBound).foreach { a =>
+    smallAdj(adj).foreach { a =>
       val spark = adj.sparkSession
       import spark.implicits._
       return lpaDriver(a, rounds).toSeq.toDF("id", "label")
     }
+    lpaLoop(adj, rounds)
+  }
+
+  /** The distributed LPA round loop over a prepared doubled adjacency
+    * ([[modularity]] shares it so the undirected collapse is built once,
+    * not per consumer). */
+  private def lpaLoop(adj: DataFrame, rounds: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     var labels = adj.select(col("x").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     val ck = roundCkpt(rounds, maxLazy = 8)
@@ -960,7 +864,7 @@ object GraphOps {
     * eager truncation IS the measured optimum here: the state feeds ~5
     * consumers per round, so the lazy-chain alternative multiplies the plan
     * ~5x per round and its Catalyst analysis dwarfs the saved barriers
-    * (tools/IterProbe, round 5; contrast [[betweenness]]'s linear chain).
+    * (measured in round 5; contrast [[betweenness]]'s linear chain).
     * Integer range: scores reach k_{x,C}·2m ≲ (2m)², exact in BIGINT up to
     * 2m ≈ 3e9 total edge weight — beyond that, bucket the graph first (the
     * same envelope as kg_modularity's q_num).
@@ -987,32 +891,6 @@ object GraphOps {
     (und, adj, deg)
   }
 
-  /** Bound for the Louvain family's small-graph driver fast path: graphs
-    * whose doubled adjacency fits under this many rows are collected ONCE
-    * and the moves loop / rollups replay driver-side with bit-identical
-    * integer arithmetic. This is the shape production multilevel Louvain
-    * takes anyway — coarsen until the graph fits one machine, finish
-    * locally — so it is the honest final-level path, not a shortcut:
-    * above the bound every operator runs the unchanged distributed loop. */
-  private val louvainSmallBound = 32768
-
-  /** The doubled adjacency collected when small enough, else None. */
-  private def collectSmallAdj(adj: DataFrame,
-      bound: Int = louvainSmallBound): Option[Array[(String, String, Long)]] = {
-    if (bound <= 0) return None
-    // only string-keyed, long-weighted adjacencies are driver-replayable
-    // (the comparators below are UTF-8 binary / exact Long)
-    val dt = adj.schema.fields.map(_.dataType)
-    if (dt.length != 3 ||
-        dt(0) != org.apache.spark.sql.types.StringType ||
-        dt(1) != org.apache.spark.sql.types.StringType ||
-        dt(2) != org.apache.spark.sql.types.LongType) return None
-    val rows = adj.limit(bound + 1).collect()
-    if (rows.length > bound || rows.isEmpty ||
-        rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) None
-    else Some(rows.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
-  }
-
   /** Spark's binary UTF-8 string order, driver-side (UTF8String semantics —
     * unsigned byte comparison, NOT Java's UTF-16 compareTo). */
   private def utf8Less(a: String, b: String): Boolean =
@@ -1030,7 +908,7 @@ object GraphOps {
     java.lang.Long.parseLong(hex, 16) % colors
   }
 
-  /** Driver replica of [[louvainMovesOn]]'s synchronous moves loop over a
+  /** Driver replica of [[louvainMovesLoop]]'s synchronous moves loop over a
     * collected doubled adjacency — the same per-round dataflow (color-gated
     * movers, community totals from the PRE-round state, candidate SUM with
     * the unconditional stay row, the singleton-swap filter, exact BIGINT
@@ -1039,6 +917,7 @@ object GraphOps {
     * paths equal). Returns (id, label) pairs. */
   private def louvainMovesDriver(adj: Array[(String, String, Long)],
       rounds: Int, colors: Int): Array[(String, String)] = {
+    require(colors >= 2, s"need >= 2 colors, got $colors")
     val ki = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
     adj.foreach { case (x, _, w) => ki(x) += w }
     val m2 = ki.valuesIterator.sum
@@ -1088,29 +967,29 @@ object GraphOps {
     nodes.map(x => x -> label(x))
   }
 
-  def louvainMoves(edges: DataFrame, rounds: Int = 4, colors: Int = 4,
-      smallBound: Int = louvainSmallBound): DataFrame =
-    louvainMovesOn(communityPrep(edges), rounds, colors, smallBound)
-
-  /** Moves loop over an already-materialized [[communityPrep]] tuple —
-    * coarsen/profile call this so the undirected collapse + degree
-    * checkpoints are built ONCE and shared between the loop and their own
-    * rollups (previously each ran communityPrep twice: two materializations
-    * of the same adjacency off the full upstream pipeline). */
-  private def louvainMovesOn(prep: (DataFrame, DataFrame, DataFrame),
-                             rounds: Int, colors: Int,
-                             smallBound: Int = louvainSmallBound): DataFrame = {
-    require(colors >= 2, s"need >= 2 colors, got $colors")
-    val (_, adj, deg) = prep
+  def louvainMoves(edges: DataFrame, rounds: Int = 4, colors: Int = 4): DataFrame = {
+    val prep = communityPrep(edges)
     // SMALL-GRAPH FAST PATH: the eager per-round loop is ~6 jobs/round of
     // microseconds of real work on a coarsened/small graph — collect the
     // checkpointed adjacency once and replay the identical moves loop
     // driver-side ([[louvainMovesDriver]]; bit-equal labels, spec-pinned).
-    collectSmallAdj(adj, smallBound).foreach { a =>
-      val spark = adj.sparkSession
+    smallAdj(prep._2).foreach { a =>
+      val spark = edges.sparkSession
       import spark.implicits._
       return louvainMovesDriver(a, rounds, colors).toSeq.toDF("id", "label")
     }
+    louvainMovesLoop(prep, rounds, colors)
+  }
+
+  /** The distributed moves loop over an already-materialized
+    * [[communityPrep]] tuple — coarsen/profile call this after their own
+    * small-input probe declined, so the undirected collapse + degree
+    * checkpoints are built ONCE and shared between the loop and their own
+    * rollups. */
+  private def louvainMovesLoop(prep: (DataFrame, DataFrame, DataFrame),
+                               rounds: Int, colors: Int): DataFrame = {
+    require(colors >= 2, s"need >= 2 colors, got $colors")
+    val (_, adj, deg) = prep
     // 2m is constant across rounds: one-row aggregate collected once (the
     // scc pivot convention), a literal in every round's score expression.
     // A graph with zero non-self-loop edges sums to NULL — short-circuit to
@@ -1175,13 +1054,12 @@ object GraphOps {
     * Louvain scales to web graphs. One labels join per endpoint + one
     * groupBy on the (community, community) key. Output: (ca, cb, w) with
     * ca <= cb. Engine extension, no reference counterpart. */
-  def louvainCoarsen(edges: DataFrame, rounds: Int = 4, colors: Int = 4,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def louvainCoarsen(edges: DataFrame, rounds: Int = 4, colors: Int = 4): DataFrame = {
     val prep = communityPrep(edges)
     // small-graph fast path: moves AND the coarsening rollup driver-side
     // off the one collected adjacency (same least/greatest-by-binary-UTF-8
     // collapse, 2x self-loop convention, exact Long sums)
-    collectSmallAdj(prep._2, smallBound).foreach { a =>
+    smallAdj(prep._2).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       val label = louvainMovesDriver(a, rounds, colors).toMap
@@ -1197,7 +1075,7 @@ object GraphOps {
       return rolled.toSeq.map { case ((ca, cb), w) => (ca, cb, w) }
         .toDF("ca", "cb", "w")
     }
-    val labels = louvainMovesOn(prep, rounds, colors, smallBound).localCheckpoint()
+    val labels = louvainMovesLoop(prep, rounds, colors).localCheckpoint()
     val (und, _, _) = prep
     und
       .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
@@ -1217,14 +1095,13 @@ object GraphOps {
     * edge-sized relations; the labels relation is checkpointed once and
     * consumed three ways. Output: (label, csize, tot_ki, in2_w,
     * top_member). Engine extension, no reference counterpart. */
-  def communityProfile(edges: DataFrame, rounds: Int = 4, colors: Int = 4,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def communityProfile(edges: DataFrame, rounds: Int = 4, colors: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val prep = communityPrep(edges)
     // small-graph fast path: moves and all three rollups driver-side off
     // the one collected adjacency (exact Long sums; representative = max
     // weighted degree, ties to the smallest id in binary UTF-8 order)
-    collectSmallAdj(prep._2, smallBound).foreach { a =>
+    smallAdj(prep._2).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       val label = louvainMovesDriver(a, rounds, colors).toMap
@@ -1248,7 +1125,7 @@ object GraphOps {
       return csize.keys.toSeq.map(l => (l, csize(l), totKi(l), in2(l), top(l)))
         .toDF("label", "csize", "tot_ki", "in2_w", "top_member")
     }
-    val labels = louvainMovesOn(prep, rounds, colors, smallBound).localCheckpoint()
+    val labels = louvainMovesLoop(prep, rounds, colors).localCheckpoint()
     val (und, _, deg) = prep
     val withKi = labels.join(deg.select(col("x").as("id"), col("ki")), "id")
       .localCheckpoint()
@@ -1282,8 +1159,7 @@ object GraphOps {
     * adjacency⨝labels join + one per-node sorted collect (bounded by
     * degree), lineage truncated. Output: (id, wl). Engine extension, no
     * reference counterpart. */
-  def wlLabels(edges: DataFrame, rounds: Int = 2,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def wlLabels(edges: DataFrame, rounds: Int = 2): DataFrame = {
     val und = edges.filter(col("source") =!= col("target"))
       .select(least(col("source"), col("target")).as("a"),
         greatest(col("source"), col("target")).as("b"))
@@ -1294,7 +1170,7 @@ object GraphOps {
     // small-graph fast path: degree-seeded md5 relabeling driver-side —
     // per round lbl := md5hex(lbl | "|" | sorted-neighbor-lbls joined ",")
     // with the neighbor multiset sorted in UTF-8 binary order
-    collectSmallPairs(adj, smallBound).foreach { a =>
+    smallPairs(adj).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       val nbrs = a.groupBy(_._1).map { case (x, g) => x -> g.map(_._2) }
@@ -1327,15 +1203,21 @@ object GraphOps {
   /** Driver-side wedge prep: the undirected simple adjacency collected
     * when small — (full degrees, per-node SORTED neighbor list in UTF-8
     * binary order so pair loops emit a < b exactly once). None when the
-    * graph is big or non-string-keyed (distributed path runs). */
-  private def wedgeDriver(und: DataFrame, smallBound: Int)
+    * graph is big or non-string-keyed, or when the wedges through
+    * neighbors of degree <= `maxDegree` (an upper bound on the output
+    * pairs) pass [[DriverPairBudget]] — the distributed path runs. */
+  private def wedgeDriver(und: DataFrame, maxDegree: Long)
       : Option[(collection.Map[String, Long], collection.Map[String, Array[String]])] = {
-    collectSmallPairs(und, smallBound).map { pairs =>
+    smallPairs(und).flatMap { pairs =>
       val deg = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       pairs.foreach { case (a, b) => deg(a) += 1L; deg(b) += 1L }
-      val members = (pairs.map { case (a, b) => (b, a) } ++ pairs)
-        .groupBy(_._1).map { case (n, g) => n -> g.map(_._2).sortWith(utf8Less) }
-      (deg, members)
+      val wedges = deg.valuesIterator.filter(_ <= maxDegree).map(d => d * (d - 1) / 2).sum
+      if (wedges > DriverPairBudget) None
+      else {
+        val members = (pairs.map { case (a, b) => (b, a) } ++ pairs)
+          .groupBy(_._1).map { case (n, g) => n -> g.map(_._2).sortWith(utf8Less) }
+        Some((deg, members))
+      }
     }
   }
 
@@ -1361,13 +1243,12 @@ object GraphOps {
     * construction, so ilog2 >= 1 — never a division by zero), summed as
     * BIGINT. Same wedge-join shape and hub cap as [[neighborJaccard]].
     * Output: (a, b, inter, aa_scaled). */
-  def adamicAdar(edges: DataFrame, maxDegree: Long = 10000L,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def adamicAdar(edges: DataFrame, maxDegree: Long = 10000L): DataFrame = {
     // small-graph fast path: each shared neighbor z with deg in [2, cap]
     // contributes 1e6 div floor(log2(deg z)) to every pair of its
     // neighbors — the length(bin(deg))-1 expression verbatim
     val undA = undirectedSimple(edges).localCheckpoint()
-    wedgeDriver(undA, smallBound).foreach { case (deg, members) =>
+    wedgeDriver(undA, maxDegree).foreach { case (deg, members) =>
       val spark = edges.sparkSession
       import spark.implicits._
       val inter = collection.mutable.HashMap.empty[(String, String), Long]
@@ -1426,18 +1307,16 @@ object GraphOps {
     * oracle unrolls the identical expansion as chained MATERIALIZED CTEs.
     * Distances are exact BIGINTs — bit-identical cross-engine. Output:
     * (id, dist) for every node within `rounds` hops (source included, dist 0). */
-  def bfs(edges: DataFrame, source: String, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def bfs(edges: DataFrame, source: String, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1,64]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("src"), col("target").as("dst"))
       .distinct().localCheckpoint(true)
     // small-graph fast path: the frontier BFS driver-side (identical
     // hop-count distances; nodes unreached within the budget are absent)
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    for (es <- smallPairs(adj); d <- allPairsDistDriver(es, rounds, Array(source))) {
       val spark0 = edges.sparkSession
       import spark0.implicits._
-      val d = allPairsDistDriver(es, rounds, Array(source))
       return d.toSeq.map { case ((_, dst), dd) => (dst, dd) }.toDF("id", "dist")
     }
     val spark = edges.sparkSession
@@ -1564,8 +1443,7 @@ object GraphOps {
     * same undirected weighted collapse LPA uses, two label joins, bounded
     * aggregations; the 2m total rides a one-row broadcast. Keep
     * deg_c · 2m < 2^63 (weights are edge counts here — far under). */
-  def modularity(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def modularity(edges: DataFrame, rounds: Int = 3): DataFrame = {
     // ONE undirected collapse feeds LPA and all the rollups (previously
     // labelPropagation built its own copy of the same aggregation — two
     // materializations of the full upstream pipeline)
@@ -1579,7 +1457,7 @@ object GraphOps {
     // small-graph fast path: LPA labels AND the modularity rollups
     // driver-side off the one collected adjacency (exact Long sums,
     // q_num = in2_w * 2m - deg_w^2 — the distributed expression verbatim)
-    collectSmallAdj(adjLazy, smallBound).foreach { a =>
+    smallAdj(adjLazy).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       val label = lpaDriver(a, rounds).toMap
@@ -1596,7 +1474,7 @@ object GraphOps {
         .map(l => (l, in2(l), degW(l), in2(l) * m2 - degW(l) * degW(l)))
         .toDF("label", "in2_w", "deg_w", "q_num")
     }
-    val labels = lpaOn(adjLazy.localCheckpoint(), rounds, smallBound = 0)
+    val labels = lpaLoop(adjLazy.localCheckpoint(), rounds)
       .localCheckpoint()
     val within = und
       .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
@@ -1636,7 +1514,7 @@ object GraphOps {
     * raise `rounds`). Independence and maximality (given no undecided rows)
     * are spec-asserted. */
   def maximalIndependentSet(edges: DataFrame, rounds: Int = 3,
-      seed: String = "mis", smallBound: Int = louvainSmallBound): DataFrame = {
+      seed: String = "mis"): DataFrame = {
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1,32]: $rounds")
     val und = undirectedSimple(edges)
     val adj = und.select(col("a").as("x"), col("b").as("n"))
@@ -1648,8 +1526,8 @@ object GraphOps {
     // one bounded collect + the identical Luby rounds driver-side — the
     // priority is the same md5(id|seed)||id string compared in UTF-8
     // binary order, winners/covered/undecided evolve identically
-    // (spec-pinned vs the distributed loop via smallBound=0)
-    collectSmallPairs(adj, smallBound).foreach { a =>
+    // (spec-pinned vs the forced-distributed loop)
+    smallPairs(adj).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       def prioD(id: String): String = {
@@ -1716,8 +1594,7 @@ object GraphOps {
     * Unweighted (each edge one path); per round one co-partitioned join +
     * aggregation on target, lineage truncated. The PageRank/PPR sibling for
     * path-count influence without the stochastic normalization. */
-  def katz(edges: DataFrame, rounds: Int = 3, num: Long = 1L, den: Long = 8L,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def katz(edges: DataFrame, rounds: Int = 3, num: Long = 1L, den: Long = 8L): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
     require(num >= 1 && den > num, s"alpha = $num/$den must be in (0,1)")
     val adj = edges.filter(col("source") =!= col("target"))
@@ -1726,7 +1603,7 @@ object GraphOps {
     // small-graph fast path: c_t(v) = Σ_{u→v} (num·c_{t-1}(u)) div den,
     // katz = Σ_t c_t — per-edge truncating division on non-negatives, so
     // the driver replica is exact (spec-pinned vs the loop)
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    smallPairs(adj).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
@@ -1744,18 +1621,15 @@ object GraphOps {
       .union(adj.select(col("dst").as("id"))).distinct().localCheckpoint(true)
     var c = nodes.select(col("id"), lit(1000000L).as("c"))
     var katzAcc = nodes.select(col("id"), lit(0L).as("k"))
-    // c feeds two consumers per round (next hop + the accumulator join);
-    // one truncation chain per arm (see hits) so stride/skipFinal count
-    // rounds, not calls
-    val ckC = roundCkpt(rounds, maxLazy = 5)
-    val ckK = roundCkpt(rounds, maxLazy = 5)
+    // c feeds two consumers per round (next hop + the accumulator join)
+    val ck = roundCkpt(rounds, maxLazy = 5)
     for (_ <- 1 to rounds) {
       val next = adj.join(c, adj("src") === c("id"))
         .select(col("dst").as("id"), expr(s"($num * c) div $den").as("contrib"))
         .groupBy(col("id")).agg(sum(col("contrib")).as("c"))
-      c = ckC(nodes.join(next, Seq("id"), "left")
+      c = ck(nodes.join(next, Seq("id"), "left")
         .select(col("id"), coalesce(col("c"), lit(0L)).as("c")))
-      katzAcc = ckK(katzAcc.join(c.select(col("id"), col("c")), Seq("id"))
+      katzAcc = ck(katzAcc.join(c.select(col("id"), col("c")), Seq("id"))
         .select(col("id"), (col("k") + col("c")).as("k")))
     }
     katzAcc
@@ -1775,9 +1649,11 @@ object GraphOps {
     * [[closeness]]/[[neighborhoodFunction]] min-dist recurrence's fixpoint
     * within `rounds` hops (Bellman-Ford over unit edges == per-source BFS):
     * (src, dst) -> dist for every pair at distance <= rounds, self-pairs at
-    * 0. */
+    * 0. The output is quadratic in the node count on hub-shaped graphs even
+    * under the input bound, so it gives up (None, the distributed path
+    * runs) once the map passes [[DriverPairBudget]] entries. */
   private def allPairsDistDriver(es: Array[(String, String)], rounds: Int,
-      nodes: Array[String]): collection.Map[(String, String), Long] = {
+      nodes: Array[String]): Option[collection.Map[(String, String), Long]] = {
     val out = collection.mutable.HashMap.empty[(String, String), Long]
     val nbrs = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._2) }
     nodes.foreach { src =>
@@ -1795,23 +1671,27 @@ object GraphOps {
         frontier = next.toArray
       }
       seen.foreach { case (dst, dd) => out((src, dst)) = dd }
+      if (out.size > DriverPairBudget) return None
     }
-    out
+    Some(out)
   }
 
-  def harmonic(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  /** Entry budget of the driver replicas whose output is quadratic in the
+    * node count (all-pairs distances, wedge pairs): tens of MB of boxed
+    * (String, String) keys. Above it the distributed path runs. */
+  private val DriverPairBudget = 1 << 18
+
+  def harmonic(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("asrc"), col("target").as("adst"))
       .distinct().localCheckpoint(true)
     // small-graph fast path: the bounded all-pairs relation driver-side,
     // same Σ 1e6 div dist rollup (integer div, non-negative) — spec-pinned
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    for (es <- smallPairs(adj); ns = (es.map(_._1) ++ es.map(_._2)).distinct;
+         dist <- allPairsDistDriver(es, rounds, ns)) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val ns = (es.map(_._1) ++ es.map(_._2)).distinct
-      val dist = allPairsDistDriver(es, rounds, ns)
       val h = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       dist.foreach { case ((s, t), d) => if (s != t) h(s) += 1000000L / d }
       return ns.toSeq.map(n => (n, h(n))).toDF("id", "h")
@@ -1840,19 +1720,17 @@ object GraphOps {
     * web-graph studies quote; harmonic handles disconnected graphs more
     * gracefully, closeness is the classical definition. Zero for sinks.
     * Output: (id, n_reach, sum_dist, closeness) — every column BIGINT. */
-  def closeness(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def closeness(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("asrc"), col("target").as("adst"))
       .distinct().localCheckpoint(true)
     // small-graph fast path: same BFS relation + the exact 1e6·reach div
     // Σdist rollup, zero for sinks — spec-pinned
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    for (es <- smallPairs(adj); ns = (es.map(_._1) ++ es.map(_._2)).distinct;
+         dist <- allPairsDistDriver(es, rounds, ns)) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val ns = (es.map(_._1) ++ es.map(_._2)).distinct
-      val dist = allPairsDistDriver(es, rounds, ns)
       val nr = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       val sd = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       dist.foreach { case ((s, t), d) => if (s != t) { nr(s) += 1L; sd(s) += d } }
@@ -2006,8 +1884,7 @@ object GraphOps {
     * truncated lineage; the pivot pick is a one-row driver agg (the bounded
     * collect convention); undecided shrinks monotonically. Output:
     * (id, scc) — scc = pivot id, or 'UNDECIDED'. */
-  def scc(edges: DataFrame, outerRounds: Int = 3, innerRounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def scc(edges: DataFrame, outerRounds: Int = 3, innerRounds: Int = 3): DataFrame = {
     require(outerRounds >= 1 && outerRounds <= 9 && innerRounds >= 1 && innerRounds <= 9,
       s"rounds must be in [1,9]: outer=$outerRounds inner=$innerRounds")
     val adj = edges.filter(col("source") =!= col("target"))
@@ -2018,7 +1895,7 @@ object GraphOps {
     // semantics (min-id pivot in UTF-8 binary order, innerRounds-bounded
     // forward/backward balls over the undecided-restricted edges, the
     // UNDECIDED sentinel for budget exhaustion). Spec-pinned vs the loop.
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    smallPairs(adj).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       var undec = (es.map(_._1) ++ es.map(_._2)).distinct.toSet
@@ -2101,8 +1978,7 @@ object GraphOps {
     * ground truth (HyperBallSpec pins the registers to the BFS balls).
     *
     * Output: (radius, pairs_at, pairs_within, is_effective_diameter). */
-  def neighborhoodFunction(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def neighborhoodFunction(edges: DataFrame, rounds: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
@@ -2111,11 +1987,10 @@ object GraphOps {
     // small-graph fast path: same BFS relation; the cumulative/effective-
     // diameter read is over rounds+1 rows — pure driver arithmetic
     // (pairs_within·10 >= total·9, first radius reaching it flagged)
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    for (es <- smallPairs(adj); ns = (es.map(_._1) ++ es.map(_._2)).distinct;
+         dist <- allPairsDistDriver(es, rounds, ns)) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val ns = (es.map(_._1) ++ es.map(_._2)).distinct
-      val dist = allPairsDistDriver(es, rounds, ns)
       val perR = dist.groupBy(_._2).map { case (r, g) => r -> g.size.toLong }
         .toSeq.sortBy(_._1)
       val total = perR.map(_._2).sum
@@ -2194,11 +2069,10 @@ object GraphOps {
     * unroll the identical peeling as chained MATERIALIZED CTEs. Output:
     * (a, b, support) — surviving edges with their within-truss support,
     * exact BIGINTs. */
-  def kTruss(edges: DataFrame, k: Long = 3, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def kTruss(edges: DataFrame, k: Long = 3, rounds: Int = 3): DataFrame = {
     require(k >= 2 && rounds >= 1, s"k must be >= 2 and rounds positive: k=$k rounds=$rounds")
     def support(und: DataFrame): DataFrame = {
-      val tri = trianglesOfSimple(und)
+      val tri = trianglesJoin(und)
       tri.select(col("a"), col("b"))
         .union(tri.select(col("b"), col("c")))
         .union(tri.select(col("a"), col("c")))
@@ -2209,7 +2083,7 @@ object GraphOps {
     // per round, support = per-edge triangle count from the same a<b<c
     // enumeration, edges below k-2 dropped; final support recomputed on
     // the surviving relation (spec-pinned vs the loop)
-    collectSmallPairs(und, smallBound).foreach { pairs0 =>
+    smallPairs(und).foreach { pairs0 =>
       val spark = edges.sparkSession
       import spark.implicits._
       def supportOf(u: Array[(String, String)]): collection.Map[(String, String), Long] = {
@@ -2358,8 +2232,7 @@ object GraphOps {
       s -> g.map(_._2).sortWith(utf8Less)
     }
 
-  def randomWalks(edges: DataFrame, walkLen: Int = 4, seed: String = "w",
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def randomWalks(edges: DataFrame, walkLen: Int = 4, seed: String = "w"): DataFrame = {
     require(walkLen >= 1 && walkLen <= 64, s"walkLen must be in [1,64]: $walkLen")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("src"), col("target").as("dst")).distinct()
@@ -2372,7 +2245,7 @@ object GraphOps {
     // the ranked adjacency — one bounded collect and every walk replays
     // driver-side (same md5(node|t|seed) pick mod degree over the same
     // dst-ascending neighbor ranks; sink nodes end walks). Spec-pinned.
-    collectSmallPairs(adjd.select(col("src"), col("dst")), smallBound).foreach { es =>
+    smallPairs(adjd.select(col("src"), col("dst"))).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val ranked = rankedAdj(es)
@@ -2402,10 +2275,7 @@ object GraphOps {
       .union(adjd.select(col("dst"))).distinct()
     // cur feeds two consumers per step (next hop + the output union)
     val ck = roundCkpt(walkLen, maxLazy = 5)
-    // the pre-loop state uses its OWN instance so the loop's counter maps
-    // 1:1 to rounds (stride/skipFinal correctness under non-default knobs)
-    var cur = roundCkpt(walkLen, maxLazy = 5)(
-      nodes.select(col("id").as("start"), col("id").as("node")))
+    var cur = ck(nodes.select(col("id").as("start"), col("id").as("node")))
     var out = cur.select(col("start"), lit(0L).as("step"), col("node"))
     for (t <- 1 to walkLen) {
       val pick = conv(substring(md5(
@@ -2434,8 +2304,7 @@ object GraphOps {
     * flag + one per-walk window — lineage truncated per step. Output:
     * (start, step, node), the [[walkPairs]] input schema. */
   def node2vecWalks(edges: DataFrame, walkLen: Int = 4, returnMult: Int = 1,
-      sharedMult: Int = 2, awayMult: Int = 4, seed: String = "n2v",
-      smallBound: Int = louvainSmallBound): DataFrame = {
+      sharedMult: Int = 2, awayMult: Int = 4, seed: String = "n2v"): DataFrame = {
     require(walkLen >= 1 && walkLen <= 64, s"walkLen must be in [1,64]: $walkLen")
     require(returnMult >= 1 && sharedMult >= 1 && awayMult >= 1,
       s"multiplicities must be >= 1: ($returnMult, $sharedMult, $awayMult)")
@@ -2451,7 +2320,7 @@ object GraphOps {
     // md5(prev|cur|t|seed) mod Σmult over the cumulative ranges of the
     // rank-ordered candidates with the same return/shared/away
     // multiplicities. Dead ends truncate. Spec-pinned vs the loop.
-    collectSmallPairs(adjd.select(col("src"), col("dst")), smallBound).foreach { es =>
+    smallPairs(adjd.select(col("src"), col("dst"))).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val ranked = rankedAdj(es)
@@ -2572,17 +2441,22 @@ object GraphOps {
   /** Node-ordered triangle enumeration over an [[undirectedSimple]] relation:
     * wedge join (a,b)⨝(b,c) closed by (a,c) — each triangle exactly once as
     * a < b < c, two key joins. The ONE copy of the algorithm
-    * ([[clusteringCoeff]], [[kTruss]], and [[graft.ops.DocKg.trianglesFromEdges]]
-    * all call it). */
-  private[graft] def trianglesOfSimple(und: DataFrame,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+    * ([[clusteringCoeff]] and [[graft.ops.DocKg.trianglesFromEdges]] call
+    * it; [[kTruss]], which probes once itself, calls the distributed body
+    * in every peeling round). */
+  private[graft] def trianglesOfSimple(und: DataFrame): DataFrame = {
     // small-graph fast path: the same a<b<c wedge-close enumeration off one
     // bounded collect (each triangle exactly once)
-    collectSmallPairs(und, smallBound).foreach { pairs =>
+    smallPairs(und).foreach { pairs =>
       val spark = und.sparkSession
       import spark.implicits._
       return trianglesDriver(pairs).toSeq.toDF("a", "b", "c")
     }
+    trianglesJoin(und)
+  }
+
+  /** The distributed body of [[trianglesOfSimple]]. */
+  private def trianglesJoin(und: DataFrame): DataFrame = {
     val wedges = und.as("x").join(und.as("y"), col("x.b") === col("y.a"))
       .select(col("x.a").as("a"), col("x.b").as("b"), col("y.b").as("c"))
     wedges.as("w")
@@ -2602,26 +2476,8 @@ object GraphOps {
     }
   }
 
-  def clusteringCoeff(edges: DataFrame,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def clusteringCoeff(edges: DataFrame): DataFrame = {
     val und = undirectedSimple(edges).localCheckpoint(true)
-    // small-graph fast path: degrees, per-corner triangle counts and the
-    // one double division of exact ints driver-side (deg < 2 filtered
-    // before the division, as distributed)
-    collectSmallPairs(und, smallBound).foreach { pairs =>
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val deg = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-      pairs.foreach { case (a, b) => deg(a) += 1L; deg(b) += 1L }
-      val tri = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-      trianglesDriver(pairs).foreach { case (a, b, c) =>
-        tri(a) += 1L; tri(b) += 1L; tri(c) += 1L
-      }
-      return deg.keys.toSeq.filter(deg(_) >= 2L).map { id =>
-        val (d, t) = (deg(id), tri(id))
-        (id, d, t, (t * 2L).toDouble / (d * (d - 1L)).toDouble)
-      }.toDF("id", "deg", "tri", "coeff")
-    }
     val deg = degreesOfSimple(und)
     val triangles = trianglesOfSimple(und)
     val triPerNode = triangles.select(col("a").as("id"))
@@ -2660,7 +2516,7 @@ object GraphOps {
     * Output: (id, dist) for nodes reachable within `rounds` hops.
     * Engine extension, no reference counterpart. */
   def sssp(edges: DataFrame, source: String, rounds: Int = 4,
-      costScale: Long = 1000000L, smallBound: Int = louvainSmallBound): DataFrame = {
+      costScale: Long = 1000000L): DataFrame = {
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1,32]: $rounds")
     require(costScale >= 1L, s"costScale must be positive: $costScale")
     val cInt = when(col("c") =!= floor(col("c")),
@@ -2674,7 +2530,7 @@ object GraphOps {
     // small-graph fast path: bounded Bellman-Ford driver-side off the
     // validated cost relation (same min-plus relaxation per round over the
     // cumulative settled set; costs are the already-divided Longs)
-    collectSmallAdj(adj, smallBound).foreach { es =>
+    smallAdj(adj).foreach { es =>
       val spark0 = edges.sparkSession
       import spark0.implicits._
       val nbrs = es.groupBy(_._1)
@@ -2960,8 +2816,7 @@ object GraphOps {
     * direction (same shape as [[bfs]]), every frontier localCheckpointed to
     * truncate lineage; the classify step is two left joins on the node id
     * and one vocabulary-sized rollup. No driver-side data beyond the plan. */
-  def bowTie(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def bowTie(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 9, s"rounds must be in [1,9]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("src"), col("target").as("dst"))
@@ -2969,7 +2824,7 @@ object GraphOps {
     // small-graph fast path: pivot = min node id in UTF-8 binary order,
     // F/B = bounded forward/backward balls, then the four-way classify —
     // one bounded collect replaces the two frontier chains (spec-pinned)
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    smallPairs(adj).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
@@ -2999,13 +2854,12 @@ object GraphOps {
     var b = f
     // two independent frontier chains, each 2x plan growth per round —
     // rounds <= 4 stays one lazy plan (the roundCkpt policy note)
-    val ckF = roundCkpt(rounds, maxLazy = 4)
-    val ckB = roundCkpt(rounds, maxLazy = 4)
+    val ck = roundCkpt(rounds, maxLazy = 4)
     for (_ <- 1 to rounds) {
-      f = ckF(f.union(adj.join(f.withColumnRenamed("id", "src"), "src")
+      f = ck(f.union(adj.join(f.withColumnRenamed("id", "src"), "src")
           .select(col("dst").as("id")))
         .distinct())
-      b = ckB(b.union(adj.join(b.withColumnRenamed("id", "dst"), "dst")
+      b = ck(b.union(adj.join(b.withColumnRenamed("id", "dst"), "dst")
           .select(col("src").as("id")))
         .distinct())
     }

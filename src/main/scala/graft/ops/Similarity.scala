@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.SmallInput
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -296,8 +297,7 @@ object Similarity {
     * floor(sum/count) over quantized coordinates (exact; empty clusters keep
     * their previous centroid). Returns the K×dim centroid matrix. */
   def kmeansCentroids(df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
-      scale: Int = 1000, seedSampleFraction: Option[Double] = None,
-      smallCollectBound: Int = 16384): Array[Array[Long]] = {
+      scale: Int = 1000, seedSampleFraction: Option[Double] = None): Array[Array[Long]] = {
     require(k >= 1, s"k=$k must be >= 1")
     // SMALL-CORPUS FAST PATH: training is a driver-synchronous loop of tiny
     // jobs whose wall cost is almost entirely per-action overhead when the
@@ -308,14 +308,12 @@ object Similarity {
     // quantization expression evaluated IN Spark, same maximin start/tie
     // rules, Long sums — order-independent — and the same
     // floor(sum.toDouble/cnt) update), so the returned matrix is
-    // bit-identical (KmSpec pins the two paths equal). Above the bound the
-    // probe is abandoned and the scale-correct job loop runs — the driver
-    // never holds more than smallCollectBound+1 quantized points (~8 MB at
-    // the default bound for dim=64). Callers can pass 0 to force the
-    // distributed path.
-    if (seedSampleFraction.isEmpty && smallCollectBound > 0) {
-      val head = quantized(df, id, vec, scale).limit(smallCollectBound + 1).collect()
-      if (head.length <= smallCollectBound) {
+    // bit-identical (PqSpec pins the two paths equal). Above the
+    // [[graft.core.SmallInput]] bound (default
+    // [[graft.core.SmallInput.TrainBound]] points, ~8 MB for dim=64; 0
+    // forces the distributed path) the scale-correct job loop runs.
+    if (seedSampleFraction.isEmpty) {
+      SmallInput.rows(quantized(df, id, vec, scale), SmallInput.TrainBound).foreach { head =>
         require(head.length >= k, s"corpus has fewer than k=$k vectors")
         val pts = head.map(r => (r.get(0), r.getSeq[Long](1).toArray))
           .sortWith((a, b) => idLess(a._1, b._1)).map(_._2)
@@ -570,8 +568,7 @@ object Similarity {
     * more than K×dim rows per iteration. */
   def pqCodebooks(df: DataFrame, id: Column, vec: Column, dim: Int, m: Int,
       ksub: Int, iters: Int, scale: Int = 1000,
-      seedSampleFraction: Option[Double] = None,
-      smallCollectBound: Int = 16384): Array[Array[Array[Long]]] = {
+      seedSampleFraction: Option[Double] = None): Array[Array[Array[Long]]] = {
     require(m >= 1 && dim % m == 0, s"dim=$dim not divisible by m=$m")
     require(ksub >= 1, s"ksub=$ksub must be >= 1")
     val w = dim / m
@@ -592,11 +589,9 @@ object Similarity {
     // the ksub-1 seeding jobs and the per-iteration joint-Lloyd jobs; each
     // subspace then trains through [[kmeansDriver]], whose math is the
     // distributed loop's bit-for-bit (PqSpec pins the paths equal). Above
-    // the bound the probe is abandoned for the scale-correct job loop.
-    if (seedSampleFraction.isEmpty && smallCollectBound > 0) {
-      val head = df.select(id.as("id"), qs.as("qs"))
-        .limit(smallCollectBound + 1).collect()
-      if (head.length <= smallCollectBound) {
+    // the SmallInput bound the scale-correct job loop runs.
+    if (seedSampleFraction.isEmpty) {
+      SmallInput.rows(df.select(id.as("id"), qs.as("qs")), SmallInput.TrainBound).foreach { head =>
         require(head.length >= ksub, s"corpus has fewer than ksub=$ksub vectors")
         val pts = head.map(r => (r.get(0), subvecs(r, 1)))
           .sortWith((a, b) => idLess(a._1, b._1)).map(_._2)

@@ -262,7 +262,40 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (it <- Seq(1, 2, 3))
       assert(rows(GraphOps.hits(e, iters = it)) ==
-        rows(GraphOps.hits(e, iters = it, smallBound = 0)), s"iters=$it")
+        rows(GraphOps.hits(forced(e), iters = it)), s"iters=$it")
+  }
+
+  test("hits: null-keyed edges give the forced-distributed result") {
+    // prPrep keeps null-keyed groups; the driver replica must decline them
+    // (the distributed joins never match a null key) instead of scoring a
+    // null node. A null target is the case a first-row type check misses:
+    // null sources sort first in the prepared relation, null targets not.
+    val nullTarget = edges(("A", "C", 1), ("B", null, 2), ("C", "D", 2))
+    val nullSource = edges(("A", "C", 1), ("B", "C", 1), ("C", "D", 2),
+      ("D", "A", 1), (null, "C", 3))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    for (e <- Seq(nullTarget, nullSource); it <- Seq(1, 2))
+      assert(rows(GraphOps.hits(e, iters = it)) ==
+        rows(GraphOps.hits(forced(e), iters = it)), s"iters=$it")
+  }
+
+  test("quadratic replicas: a hub graph under the input bound declines past the driver budget") {
+    // 1,500 edges, far under the input bound, whose 2-hop all-pairs
+    // relation has 751^2 = 564,001 entries and whose hub closes
+    // C(750, 2) = 280,875 wedges: the all-pairs and wedge replicas must
+    // hand over to the distributed loops instead of growing the driver heap
+    val leaves = (0 until 750).map(i => f"L$i%03d")
+    val e = edges(leaves.flatMap(l => Seq(("H", l, 1.0), (l, "H", 1.0))): _*)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    def distributed(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.isEmpty
+    val h = GraphOps.harmonic(e, rounds = 2)
+    assert(distributed(h), "hub graph took the all-pairs replica")
+    assert(rows(h) == rows(GraphOps.harmonic(forced(e), rounds = 2)))
+    val nj = GraphOps.neighborJaccard(e)
+    assert(distributed(nj), "hub graph took the wedge replica")
+    assert(rows(nj) == rows(GraphOps.neighborJaccard(forced(e))))
   }
 
   test("pagerank family / katz / mis: driver fast path == distributed loop") {
@@ -271,28 +304,24 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     val e = edges(("A", "B", 2), ("B", "A", 1), ("B", "C", 3), ("C", "D", 1),
       ("A", "B", 1), ("E", "E", 4), ("X", "Y", 1))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    assert(rows(GraphOps.pageRank(e, iters = 3)) ==
-      rows(GraphOps.pageRank(e, iters = 3, smallBound = 0)))
     assert(rows(GraphOps.pageRankDangling(e, iters = 3)) ==
-      rows(GraphOps.pageRankDangling(e, iters = 3, smallBound = 0)))
+      rows(GraphOps.pageRankDangling(forced(e), iters = 3)))
     // epsilon stop must fire at the same round on both paths
     assert(rows(GraphOps.pageRankDangling(e, iters = 20, eps = 100000000L)) ==
-      rows(GraphOps.pageRankDangling(e, iters = 20, eps = 100000000L, smallBound = 0)))
+      rows(GraphOps.pageRankDangling(forced(e), iters = 20, eps = 100000000L)))
     assert(rows(GraphOps.personalizedPageRank(e, "A", iters = 3)) ==
-      rows(GraphOps.personalizedPageRank(e, "A", iters = 3, smallBound = 0)))
+      rows(GraphOps.personalizedPageRank(forced(e), "A", iters = 3)))
+    // resume == full run
     val prev = GraphOps.pageRank(e, iters = 2)
-    assert(rows(GraphOps.pageRankResume(e, prev, iters = 1)) ==
-      rows(GraphOps.pageRankResume(e, prev, iters = 1, smallBound = 0)))
-    // resume == full run, through the fast path too
     assert(rows(GraphOps.pageRankResume(e, prev, iters = 1)) ==
       rows(GraphOps.pageRank(e, iters = 3)))
     assert(rows(GraphOps.katz(e, rounds = 3)) ==
-      rows(GraphOps.katz(e, rounds = 3, smallBound = 0)))
+      rows(GraphOps.katz(forced(e), rounds = 3)))
     assert(rows(GraphOps.maximalIndependentSet(e, rounds = 3)) ==
-      rows(GraphOps.maximalIndependentSet(e, rounds = 3, smallBound = 0)))
+      rows(GraphOps.maximalIndependentSet(forced(e), rounds = 3)))
     // an undecided-leaving round budget must also agree
     assert(rows(GraphOps.maximalIndependentSet(e, rounds = 1)) ==
-      rows(GraphOps.maximalIndependentSet(e, rounds = 1, smallBound = 0)))
+      rows(GraphOps.maximalIndependentSet(forced(e), rounds = 1)))
   }
 
   test("wedge family / wl / ktruss: driver fast path == distributed loop") {
@@ -303,20 +332,18 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
       ("H", "D", 1))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     assert(rows(GraphOps.trianglesOfSimple(GraphOps.undirectedSimple(e))) ==
-      rows(GraphOps.trianglesOfSimple(GraphOps.undirectedSimple(e), smallBound = 0)))
-    assert(rows(GraphOps.clusteringCoeff(e)) ==
-      rows(GraphOps.clusteringCoeff(e, smallBound = 0)))
+      rows(GraphOps.trianglesOfSimple(GraphOps.undirectedSimple(forced(e)))))
     for (r <- Seq(1, 2))
       assert(rows(GraphOps.wlLabels(e, rounds = r)) ==
-        rows(GraphOps.wlLabels(e, rounds = r, smallBound = 0)), s"wl r=$r")
+        rows(GraphOps.wlLabels(forced(e), rounds = r)), s"wl r=$r")
     for (k <- Seq(2L, 3L, 4L))
       assert(rows(GraphOps.kTruss(e, k = k)) ==
-        rows(GraphOps.kTruss(e, k = k, smallBound = 0)), s"ktruss k=$k")
+        rows(GraphOps.kTruss(forced(e), k = k)), s"ktruss k=$k")
     for (cap <- Seq(3L, 10000L)) {
       assert(rows(GraphOps.neighborJaccard(e, maxDegree = cap)) ==
-        rows(GraphOps.neighborJaccard(e, maxDegree = cap, smallBound = 0)), s"nj $cap")
+        rows(GraphOps.neighborJaccard(forced(e), maxDegree = cap)), s"nj $cap")
       assert(rows(GraphOps.adamicAdar(e, maxDegree = cap)) ==
-        rows(GraphOps.adamicAdar(e, maxDegree = cap, smallBound = 0)), s"aa $cap")
+        rows(GraphOps.adamicAdar(forced(e), maxDegree = cap)), s"aa $cap")
     }
   }
 
@@ -326,9 +353,9 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (r <- Seq(1, 4)) {
       assert(rows(GraphOps.sssp(e, "A", rounds = r)) ==
-        rows(GraphOps.sssp(e, "A", rounds = r, smallBound = 0)), s"sssp r=$r")
+        rows(GraphOps.sssp(forced(e), "A", rounds = r)), s"sssp r=$r")
       assert(rows(GraphOps.bowTie(e, rounds = r)) ==
-        rows(GraphOps.bowTie(e, rounds = r, smallBound = 0)), s"bowtie r=$r")
+        rows(GraphOps.bowTie(forced(e), rounds = r)), s"bowtie r=$r")
     }
   }
 
@@ -339,17 +366,17 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (r <- Seq(1, 3)) {
       assert(rows(GraphOps.harmonic(e, rounds = r)) ==
-        rows(GraphOps.harmonic(e, rounds = r, smallBound = 0)), s"harmonic r=$r")
+        rows(GraphOps.harmonic(forced(e), rounds = r)), s"harmonic r=$r")
       assert(rows(GraphOps.closeness(e, rounds = r)) ==
-        rows(GraphOps.closeness(e, rounds = r, smallBound = 0)), s"closeness r=$r")
+        rows(GraphOps.closeness(forced(e), rounds = r)), s"closeness r=$r")
       assert(rows(GraphOps.neighborhoodFunction(e, rounds = r)) ==
-        rows(GraphOps.neighborhoodFunction(e, rounds = r, smallBound = 0)), s"nf r=$r")
+        rows(GraphOps.neighborhoodFunction(forced(e), rounds = r)), s"nf r=$r")
       assert(rows(GraphOps.bfs(e, "A", rounds = r)) ==
-        rows(GraphOps.bfs(e, "A", rounds = r, smallBound = 0)), s"bfs r=$r")
+        rows(GraphOps.bfs(forced(e), "A", rounds = r)), s"bfs r=$r")
     }
     // a source with no out-edges still reports itself at distance 0
     assert(rows(GraphOps.bfs(e, "Y", rounds = 2)) ==
-      rows(GraphOps.bfs(e, "Y", rounds = 2, smallBound = 0)))
+      rows(GraphOps.bfs(forced(e), "Y", rounds = 2)))
   }
 
   test("walks: driver fast path == distributed loop (first and second order)") {
@@ -360,13 +387,13 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (len <- Seq(1, 4))
       assert(rows(GraphOps.randomWalks(e, walkLen = len)) ==
-        rows(GraphOps.randomWalks(e, walkLen = len, smallBound = 0)), s"rw len=$len")
+        rows(GraphOps.randomWalks(forced(e), walkLen = len)), s"rw len=$len")
     assert(rows(GraphOps.node2vecWalks(e, walkLen = 4)) ==
-      rows(GraphOps.node2vecWalks(e, walkLen = 4, smallBound = 0)))
+      rows(GraphOps.node2vecWalks(forced(e), walkLen = 4)))
     assert(rows(GraphOps.node2vecWalks(e, walkLen = 3, returnMult = 3,
         sharedMult = 1, awayMult = 2)) ==
-      rows(GraphOps.node2vecWalks(e, walkLen = 3, returnMult = 3,
-        sharedMult = 1, awayMult = 2, smallBound = 0)))
+      rows(GraphOps.node2vecWalks(forced(e), walkLen = 3, returnMult = 3,
+        sharedMult = 1, awayMult = 2)))
   }
 
   test("scc / kcore: driver fast path == distributed loop") {
@@ -376,10 +403,10 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for ((o, i) <- Seq((3, 3), (1, 1), (2, 2)))
       assert(rows(GraphOps.scc(e, o, i)) ==
-        rows(GraphOps.scc(e, o, i, smallBound = 0)), s"scc outer=$o inner=$i")
+        rows(GraphOps.scc(forced(e), o, i)), s"scc outer=$o inner=$i")
     for (k <- Seq(1L, 2L))
       assert(rows(GraphOps.kCore(e, k = k)) ==
-        rows(GraphOps.kCore(e, k = k, smallBound = 0)), s"kcore k=$k")
+        rows(GraphOps.kCore(forced(e), k = k)), s"kcore k=$k")
   }
 
   test("lpa/modularity: small-graph driver fast path == distributed loop") {
@@ -388,9 +415,9 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (r <- Seq(1, 3))
       assert(rows(GraphOps.labelPropagation(e, rounds = r)) ==
-        rows(GraphOps.labelPropagation(e, rounds = r, smallBound = 0)), s"lpa r=$r")
+        rows(GraphOps.labelPropagation(forced(e), rounds = r)), s"lpa r=$r")
     assert(rows(GraphOps.modularity(e)) ==
-      rows(GraphOps.modularity(e, smallBound = 0)))
+      rows(GraphOps.modularity(forced(e))))
   }
 
   test("labelPropagation: a weakly-bridged barbell splits into two communities") {
@@ -448,7 +475,7 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("louvain family: small-graph driver fast path == distributed loop, bit for bit") {
-    // smallBound=0 forces the distributed per-round loop; the default takes
+    // forced() runs the distributed per-round loop; the default takes
     // the one-collect driver path on these fixtures. Mixed weights + a
     // bridge exercise the color schedule, the stay row, the singleton-swap
     // guard and the (score desc, label asc) argmax on both paths.
@@ -457,11 +484,11 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
       ("F", "F", 9), ("B", "A", 1)) // self-loop dropped, reverse edge folds in
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     assert(rows(GraphOps.louvainMoves(e, rounds = 4)) ==
-      rows(GraphOps.louvainMoves(e, rounds = 4, smallBound = 0)))
+      rows(GraphOps.louvainMoves(forced(e), rounds = 4)))
     assert(rows(GraphOps.louvainCoarsen(e)) ==
-      rows(GraphOps.louvainCoarsen(e, smallBound = 0)))
+      rows(GraphOps.louvainCoarsen(forced(e))))
     assert(rows(GraphOps.communityProfile(e)) ==
-      rows(GraphOps.communityProfile(e, smallBound = 0)))
+      rows(GraphOps.communityProfile(forced(e))))
   }
 
   test("louvainCoarsen: barbell collapses to 2 supernodes; level-2 moves merge them") {

@@ -51,10 +51,10 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (10L, 3L), (11L, 11L)).toDF("a_id", "b_id")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    assert(rows(Dedup.clusters(pairs)) == rows(Dedup.clusters(pairs, smallBound = 0)))
+    assert(rows(Dedup.clusters(pairs)) == rows(Dedup.clusters(forced(pairs))))
     val sp = Seq(("B.x", "A.y"), ("A.y", "C\u00e9.z"), ("D.q", "D.r"))
       .toDF("a_id", "b_id")
-    assert(rows(Dedup.clusters(sp)) == rows(Dedup.clusters(sp, smallBound = 0)))
+    assert(rows(Dedup.clusters(sp)) == rows(Dedup.clusters(forced(sp))))
   }
 
   test("clusters: one Spark action per round — no separate changed-count job (round-3 verdict #1)") {
@@ -62,6 +62,8 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     // from concurrently-running suites (which use the parent session) never
     // land in this listener — the assertion observes only this clustering run
     val s2 = spark.newSession()
+    // this test pins the DISTRIBUTED loop's action profile
+    s2.conf.set(graft.core.SmallInput.Conf, "0")
     import s2.implicits._
     // long chain (diameter 15) forces several propagate rounds
     val pairs = (0L until 15L).map(i => (i, i + 1)).toDF("a_id", "b_id")
@@ -75,8 +77,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     }
     s2.listenerManager.register(listener)
     try {
-      // smallBound=0: this test pins the DISTRIBUTED loop's action profile
-      val c = Dedup.clusters(pairs, smallBound = 0).collect()
+      val c = Dedup.clusters(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(c == (0L to 15L).map(_ -> 0L).toMap)
       // listener events are async: wait until the stream goes quiet
